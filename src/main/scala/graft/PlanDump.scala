@@ -24,6 +24,7 @@ object PlanDump {
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.ui.enabled", "false")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
+      .config("spark.sql.codegen.cache.maxEntries", "10000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))
@@ -42,7 +43,8 @@ object PlanDump {
           qe.executedPlan.toString.split("== Initial Plan ==")(0)
         } else qe.explainString(FormattedMode)
         Files.writeString(Paths.get(outDir, s"${n}_$tag.txt"), plan)
-        val ex = "Exchange".r.findAllIn(plan).size
+        // word-bounded: shuffle and broadcast exchanges, not ReusedExchange
+        val ex = """\b(?:Broadcast)?Exchange\b""".r.findAllIn(plan).size
         val reused = "ReusedExchange".r.findAllIn(plan).size
         val scans = plan.linesIterator.count(l =>
           l.contains("Scan parquet") || l.contains("FileScan"))

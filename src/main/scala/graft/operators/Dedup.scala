@@ -720,10 +720,12 @@ object Dedup {
       .write.mode("overwrite").parquet(path)
   }
 
-  /** Load a sketch persisted by [[writeSketch]]. */
+  /** Load a sketch persisted by [[writeSketch]]. The schema is the one
+    * [[writeSketch]] wrote, so the read starts no schema-inference job. */
   def readSketch(spark: org.apache.spark.sql.SparkSession,
       path: String): BloomFilter = {
-    val bytes = spark.read.parquet(path).head().getAs[Array[Byte]]("sketch")
+    val bytes = spark.read.schema("sketch BINARY").parquet(path)
+      .head().getAs[Array[Byte]]("sketch")
     BloomFilter.readFrom(new java.io.ByteArrayInputStream(bytes))
   }
 

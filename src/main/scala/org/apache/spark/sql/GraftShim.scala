@@ -22,6 +22,16 @@ object GraftShim {
   def functionRegistry(spark: SparkSession): catalyst.analysis.FunctionRegistry =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry
 
+  /** private[sql] session state behind a driver-side parquet footer
+    * read: the session's SQL conf (for the schema converter) and a
+    * Hadoop conf carrying the session's overrides (for the file
+    * system) — what Spark's own schema inference uses. */
+  def sqlConf(spark: SparkSession): internal.SQLConf =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+
   /** Drain the (private[spark]) listener bus — lets tests that count
     * jobs via a SparkListener observe a deterministic event count. */
   def drainListenerBus(spark: SparkSession): Unit =
